@@ -284,10 +284,15 @@ private[sources] class GraftMissingTable(
 }
 
 private[sources] class GraftConnectorTable(
-    gtable: Table, sparkSchema: StructType,
+    private[sources] val gtable: Table, sparkSchema: StructType,
     /** `VERSION AS OF` / `TIMESTAMP AS OF` pin: reads resolve this
       * snapshot, writes and row-level deletes are rejected. */
-    pinnedSnapshot: Option[Long] = None)
+    private[sources] val pinnedSnapshot: Option[Long] = None,
+    /** Staged read (the shape of Iceberg's `SparkStagedScan`): scans
+      * read exactly these tasks, with names resolved through this
+      * schema — never a refresh or a re-plan. Read-only. */
+    private[sources] val staged: Option[(graft.spec.Schema,
+      Seq[FileScanTask])] = None)
     extends ConnectorTable with SupportsRead
     with org.apache.spark.sql.connector.catalog.SupportsWrite
     with org.apache.spark.sql.connector.catalog.SupportsDelete
@@ -297,7 +302,8 @@ private[sources] class GraftConnectorTable(
 
   override def name(): String =
     (gtable.id.namespace :+ gtable.id.name).mkString(".") +
-      pinnedSnapshot.map(s => s"@$s").getOrElse("")
+      pinnedSnapshot.map(s => s"@$s").getOrElse("") +
+      staged.map(_ => " (staged)").getOrElse("")
   override def schema(): StructType = sparkSchema
   override def partitioning():
       Array[org.apache.spark.sql.connector.expressions.Transform] =
@@ -305,9 +311,36 @@ private[sources] class GraftConnectorTable(
   override def properties(): JMap[String, String] =
     gtable.metadata.properties.asJava
   override def capabilities(): JSet[TableCapability] =
-    Set(TableCapability.BATCH_READ, TableCapability.MICRO_BATCH_READ,
+    if (staged.isDefined) Set(TableCapability.BATCH_READ).asJava
+    else Set(TableCapability.BATCH_READ, TableCapability.MICRO_BATCH_READ,
       TableCapability.V1_BATCH_WRITE, TableCapability.TRUNCATE,
       TableCapability.OVERWRITE_BY_FILTER).asJava
+
+  /** The schema the relation's column names resolve through: the
+    * staged schema, the pinned snapshot's, else None (the current
+    * schema of whichever table version a scan reads). */
+  private[sources] val querySchema: Option[graft.spec.Schema] =
+    staged.map(_._1)
+      .orElse(pinnedSnapshot.map(gtable.metadata.schemaForSnapshot))
+
+  private[sources] def newScan(t: Table, pushed: Option[Expr]): Scan = {
+    val base = pinnedSnapshot.foldLeft(Scan(t, SparkSession.active))(
+      _ useSnapshot _)
+    pushed.foldLeft(base)(_ filter _)
+  }
+
+  /** The one source of a scan's (table, tasks): the staged list as
+    * given, else refresh + `planFiles` under the pin and the pushed
+    * filter. A row-level operation in flight on this instance reads
+    * its pinned snapshot instead of refreshing (see [[mutationPin]]). */
+  private[sources] def planTasks(
+      pushed: Option[Expr]): (Table, Seq[FileScanTask]) = staged match {
+    case Some((_, tasks)) => (gtable, tasks)
+    case None =>
+      val t = mutationPin.getOrElse(
+        try gtable.refresh() catch { case _: Exception => gtable })
+      (t, newScan(t, pushed).planFiles())
+  }
 
   /** Set when a row-level operation (UPDATE/MERGE/DELETE) is planned on
     * this table instance: subsequent scans of the SAME instance — in
@@ -327,9 +360,7 @@ private[sources] class GraftConnectorTable(
     // fail loud. A subset/reordering of real columns is legitimate
     // manual pruning. Writes never pass this point (V1 bridge), so
     // SaveMode semantics on mismatched frames are unaffected.
-    val resolution = pinnedSnapshot
-      .map(gtable.metadata.schemaForSnapshot)
-      .getOrElse(gtable.schema)
+    val resolution = querySchema.getOrElse(gtable.schema)
     val known = resolution.fields.map(_.name.toLowerCase).toSet
     val unknown = sparkSchema.fieldNames.filterNot(n =>
       known.contains(n.toLowerCase))
@@ -337,8 +368,7 @@ private[sources] class GraftConnectorTable(
       s"graft source: schema names ${unknown.mkString(", ")} not in " +
         s"table ${gtable.id} (columns: ${resolution.fields.map(_.name)
           .mkString(", ")})")
-    new GraftScanBuilder(gtable, sparkSchema, options, pinnedSnapshot,
-      () => mutationPin)
+    new GraftScanBuilder(this, sparkSchema, options)
   }
 
   /** SQL write path: `INSERT INTO` appends a snapshot through the
@@ -354,10 +384,13 @@ private[sources] class GraftConnectorTable(
     new GraftWriteBuilder(gtable, truncateFirst = false)
   }
 
-  private def rejectIfPinned(what: String): Unit =
+  private def rejectIfPinned(what: String): Unit = {
     pinnedSnapshot.foreach(s => throw new UnsupportedOperationException(
       s"graft: cannot $what a time-travel (VERSION/TIMESTAMP AS OF " +
         s"$s) table"))
+    if (staged.isDefined) throw new UnsupportedOperationException(
+      s"graft: cannot $what a staged read of ${gtable.id}")
+  }
 
   /** `_file` metadata column (rows report their data file; feeds the
     * row-level operations' runtime group filtering). */
@@ -385,7 +418,8 @@ private[sources] class GraftConnectorTable(
     * 3VL handling and conflict retry. */
   override def canDeleteWhere(
       filters: Array[sources.Filter]): Boolean =
-    pinnedSnapshot.isEmpty && filters.forall(FilterToExpr.exact(_).isDefined)
+    pinnedSnapshot.isEmpty && staged.isEmpty &&
+      filters.forall(FilterToExpr.exact(_).isDefined)
 
   override def deleteWhere(filters: Array[sources.Filter]): Unit = {
     rejectIfPinned("delete from")
@@ -481,9 +515,8 @@ private[sources] class GraftWriteBuilder(
   * the scan — partial conversion is always sound. Column pruning feeds
   * the parquet `requiredSchema` (ReadSchema in explain). */
 private[sources] class GraftScanBuilder(
-    gtable: Table, full: StructType, options: CaseInsensitiveStringMap,
-    pinnedSnapshot: Option[Long] = None,
-    mutationPin: () => Option[Table] = () => None)
+    source: GraftConnectorTable, full: StructType,
+    options: CaseInsensitiveStringMap)
     extends ScanBuilder
     with SupportsPushDownFilters with SupportsPushDownRequiredColumns
     with org.apache.spark.sql.connector.read.SupportsPushDownAggregates
@@ -513,20 +546,19 @@ private[sources] class GraftScanBuilder(
     *   - string bounds ≥ 16 chars may be truncated by the writer →
     *     refused (shorter bounds are verbatim);
     *   - every contributing file must carry the needed stat (all-null
-    *     files contribute nothing to MIN/MAX and may omit bounds). */
+    *     files contribute nothing to MIN/MAX and may omit bounds).
+    * The files are the scan source's tasks, so a staged read answers
+    * from exactly its staged files. */
   private lazy val aggTasks: Option[Seq[graft.spec.DataFile]] = try {
-    val t = mutationPin().getOrElse(
-      try gtable.refresh() catch { case _: Exception => gtable })
-    val scan = pinnedSnapshot.foldLeft(
-      Scan(t, SparkSession.active))(_ useSnapshot _)
-    val tasks = scan.planFiles()
+    val tasks = source.planTasks(None)._2
     if (tasks.forall(_.deleteFiles.isEmpty)) Some(tasks.map(_.file))
     else None
   } catch { case _: Exception => None }
 
   private def topField(name: Array[String]): Option[graft.spec.NestedField] =
     if (name.length != 1) None
-    else gtable.schema.fields.find(_.name == name(0))
+    else source.querySchema.getOrElse(source.gtable.schema).fields
+      .find(_.name == name(0))
 
   private def colOf(e: org.apache.spark.sql.connector.expressions.Expression)
       : Option[graft.spec.NestedField] = e match {
@@ -681,8 +713,8 @@ private[sources] class GraftScanBuilder(
   override def build(): V2Scan = aggResult match {
     case Some((schema, row, desc)) => new GraftAggScan(schema, row, desc)
     case None =>
-      new GraftV2Scan(gtable, full, required, pushedExpr, options,
-        pinnedSnapshot, emitFile, allPushed.toSeq, mutationPin, limitHint)
+      new GraftV2Scan(source, full, required, pushedExpr, options,
+        emitFile, allPushed.toSeq, limitHint)
   }
 }
 
@@ -1228,22 +1260,19 @@ private[sources] object ReaderConv {
 }
 
 private[sources] class GraftV2Scan(
-    gtable: Table,
+    /** The owning connector table: the scan's one source of (table,
+      * tasks) — refresh + plan, or a staged task list — and of the
+      * schema its names resolve through. */
+    source: GraftConnectorTable,
     full: StructType,
     required: StructType,
     pushed: Option[Expr],
     options: CaseInsensitiveStringMap,
-    pinnedSnapshot: Option[Long] = None,
     emitFile: Boolean = false,
     /** EVERY filter Spark pushed (not just the pruning-convertible
       * subset) — forwarded to parquet row-group skipping, where
       * ParquetFilters converts what it can. */
     allFilters: Seq[sources.Filter] = Nil,
-    /** Row-level-operation snapshot pin of the owning connector table:
-      * when a mutation is being planned on this table instance, its
-      * group-filter subquery must read the operation's snapshot, not a
-      * refreshed one. */
-    mutationPin: () => Option[Table] = () => None,
     /** Pushed LIMIT: plan only enough delete-free files to cover it. */
     limitHint: Option[Int] = None) extends V2Scan
     with org.apache.spark.sql.connector.read.SupportsReportStatistics
@@ -1256,11 +1285,20 @@ private[sources] class GraftV2Scan(
     * join's broadcast collapses to `true`) compares scan instances from
     * independent plannings of the same relation. Same fix Iceberg's
     * SparkBatchQueryScan ships. Runtime-filter state is deliberately
-    * excluded — canonicalization happens before runtime filtering. */
+    * excluded — canonicalization happens before runtime filtering. A
+    * staged scan's key carries every staged data and delete file: two
+    * staged reads of the same data files under different delete sets
+    * (a changelog's before/after pair) must never compare equal. */
+  private def gtable: Table = source.gtable
   private lazy val eqKey = (
     gtable.metadata.location,
     gtable.metadata.currentSnapshot.map(_.snapshotId),
-    pinnedSnapshot, emitFile,
+    source.pinnedSnapshot,
+    source.staged.map { case (schema, tasks) =>
+      (schema.schemaId, tasks.map(t =>
+        (t.file.filePath, t.deleteFiles.map(_.file.filePath))))
+    },
+    emitFile,
     required.fieldNames.toSeq,
     pushed.map(_.toString),
     allFilters.map(_.toString),
@@ -1273,7 +1311,7 @@ private[sources] class GraftV2Scan(
 
   /** Manifest-derived stats over the PRUNED file set — drives Spark's
     * broadcast-join planning for catalog tables without any data I/O
-    * (the DSv2 face of the SQL façade's GraftRelation stats). */
+    * (a staged scan reports its staged files). */
   override def estimateStatistics()
       : org.apache.spark.sql.connector.read.Statistics = {
     val tasks = batchTasks
@@ -1295,7 +1333,7 @@ private[sources] class GraftV2Scan(
     * that fails to convert prunes nothing, which is always sound. */
   override def filterAttributes(): Array[
       org.apache.spark.sql.connector.expressions.NamedReference] = {
-    val t = mutationPin().getOrElse(gtable)
+    val t = source.mutationPin.getOrElse(gtable)
     t.spec.fields
       .flatMap(pf => t.schema.field(pf.sourceId)).map(_.name).distinct
       .filter(n => full.fieldNames.contains(n))
@@ -1328,29 +1366,19 @@ private[sources] class GraftV2Scan(
 
   private def spark: SparkSession = SparkSession.active
 
-  private[sources] def newScan(t: Table): Scan = {
-    val base = pinnedSnapshot.foldLeft(Scan(t, spark))(_ useSnapshot _)
-    pushed.foldLeft(base)(_ filter _)
-  }
+  private[sources] def newScan(t: Table): Scan = source.newScan(t, pushed)
 
-  /** For pinned (VERSION/TIMESTAMP AS OF) scans, `full`/`required`
-    * carry the PINNED snapshot's column names — resolution inside
-    * [[BatchPlanning]] must go through that schema, not the current
-    * one, or a post-pin rename/drop silently null-fills. */
-  private def querySchemaOf(t: Table): Option[graft.spec.Schema] =
-    pinnedSnapshot.flatMap(sid => t.snapshotById(sid).flatMap(_.schemaId)
-      .flatMap(t.metadata.schemaById))
+  /** For pinned (VERSION/TIMESTAMP AS OF) and staged scans,
+    * `full`/`required` carry THAT schema's column names — resolution
+    * inside [[BatchPlanning]] must go through it, not the current
+    * one, or a later rename/drop silently null-fills. */
+  private def querySchema: Option[graft.spec.Schema] = source.querySchema
 
-  /** Batch reads plan ONCE (table pin + task list shared between
-    * planInputPartitions and createReaderFactory so the reader knows
-    * which equality-key columns it must decode). A row-level operation
-    * in flight on the same connector-table instance pins the snapshot
-    * instead of refreshing — the group-filter subquery and the rewrite
-    * must see the SAME file set. */
+  /** Batch reads take their tasks ONCE from the source (table + task
+    * list shared between planInputPartitions and createReaderFactory
+    * so the reader knows which equality-key columns it must decode). */
   private[sources] lazy val (batchTable, batchTasks) = {
-    val t = mutationPin().getOrElse(
-      try gtable.refresh() catch { case _: Exception => gtable })
-    val tasks = newScan(t).planFiles()
+    val (t, tasks) = source.planTasks(pushed)
     // LIMIT n with no filter: recordCount is exact per delete-free
     // file, so files beyond the first n cumulative rows can never
     // contribute — a LIMIT 10 on a million-file table plans one task.
@@ -1371,19 +1399,16 @@ private[sources] class GraftV2Scan(
 
   /** Post-runtime-filter task set. BatchScanExec replans partitions
     * (and builds the reader factory) after `filter()` ran, so both
-    * entry points below resolve through here; the re-plan is memoized
-    * per runtime expression so partitions and factory agree. */
-  @volatile private var runtimeTasks: Option[(Expr, Seq[FileScanTask])] =
-    None
+    * entry points below resolve through here. Runtime filters only
+    * NARROW the source's tasks (file bounds + partition tuple), never
+    * re-plan — a staged list stays the staged list. */
   private def effectiveTasks: Seq[FileScanTask] = runtimeExpr match {
     case None => batchTasks
-    case Some(re) => runtimeTasks match {
-      case Some((e, ts)) if e == re => ts
-      case _ =>
-        val ts = newScan(batchTable).filter(re).planFiles()
-        runtimeTasks = Some((re, ts))
-        ts
-    }
+    case Some(re) =>
+      val schema = querySchema.getOrElse(batchTable.schema)
+      val pred = re.simplify
+      batchTasks.filter(task => Scan.fileMightMatch(pred, task.file,
+        schema, batchTable.metadata.specById(task.specId)))
   }
 
   /** Storage-partitioned joins: a per-task partition KEY extractor,
@@ -1451,8 +1476,7 @@ private[sources] class GraftV2Scan(
 
   private[sources] def batchPartitions(): Array[InputPartition] = {
     val tasks = effectiveTasks
-    val parts =
-      BatchPlanning.partitions(batchTable, tasks, querySchemaOf(batchTable))
+    val parts = BatchPlanning.partitions(batchTable, tasks, querySchema)
     spjKeyer match {
       case Some(keyer) if !emitFile &&
           tasks.forall(_.specId == batchTable.spec.specId) =>
@@ -1483,7 +1507,7 @@ private[sources] class GraftV2Scan(
           parsed
         }
         .getOrElse(GraftReaderFactory.DefaultEqSetMaxBytes),
-      querySchema = querySchemaOf(batchTable))
+      querySchema = querySchema)
 
   /** Last-planned micro-batch (table + tasks), shared between
     * `planInputPartitions` and `createReaderFactory` exactly like the
@@ -1506,13 +1530,13 @@ private[sources] class GraftV2Scan(
     else
       BatchPlanning.readerFactory(spark, planned._1, planned._2, full,
         required, emitFile = false,
-        querySchema = querySchemaOf(planned._1))
+        querySchema = querySchema)
   }
 
   private[sources] def toStreamPartitions(
       t: Table, tasks: Seq[FileScanTask]): Array[InputPartition] = {
     streamPlanned = (t, tasks)
-    BatchPlanning.partitions(t, tasks, querySchemaOf(t))
+    BatchPlanning.partitions(t, tasks, querySchema)
   }
 }
 

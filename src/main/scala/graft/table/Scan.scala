@@ -195,9 +195,7 @@ class Scan private (
             .filter(e => e.status == EntryStatus.Added &&
               e.snapshotId.forall(_ == s.snapshotId))
             .filter(e => pred.forall(p =>
-              Pruning.fileMightMatch(p, e.dataFile, schema) &&
-                mfSpec.forall(sp =>
-                  Pruning.partitionTupleMightMatch(p, e.dataFile, sp, schema))))
+              Scan.fileMightMatch(p, e.dataFile, schema, mfSpec)))
             .map(e => FileScanTask(e.dataFile,
               e.sequenceNumber.getOrElse(0L), mf.partitionSpecId, Nil,
               manifest.schemaId))
@@ -490,7 +488,9 @@ class Scan private (
         .drop("__np", "__lp")
     }
     if (needMeta) df = df.drop("__file_path", "__pos")
-    eqApply(df).drop("__dseq")
+    // a using-column anti-join moves its key columns first; groups are
+    // unioned by POSITION, so restore the schema's column order
+    eqApply(df).select(schema.fields.map(f => col(f.name)): _*)
   }
 
   /** Key columns of an equality-delete group, resolved BY FIELD ID
@@ -755,6 +755,14 @@ object Scan {
     * `option("distributed-plan-threshold", n)`. */
   val DistributedPlanThreshold = 64
 
+  /** Whether `pred` may match rows of `file`, written under `spec`:
+    * column bounds, then the partition tuple. The one file-level test
+    * of planning and of narrowing an already-planned task list. */
+  private[graft] def fileMightMatch(pred: Expr, file: DataFile,
+      schema: Schema, spec: Option[PartitionSpec]): Boolean =
+    Pruning.fileMightMatch(pred, file, schema) &&
+      spec.forall(Pruning.partitionTupleMightMatch(pred, file, _, schema))
+
   /** Read-side pruning of one manifest's live entries — a pure
     * function of shipped values so it can run inside an executor task
     * (no Table/SparkSession capture). Returns
@@ -763,11 +771,7 @@ object Scan {
       specId: Int, pred: Option[Expr], schema: Schema,
       spec: Option[PartitionSpec]): Seq[(DataFile, Long, Int, Int)] =
     manifest.liveEntries.flatMap { e =>
-      val survives = pred.forall(p =>
-        Pruning.fileMightMatch(p, e.dataFile, schema) &&
-          spec.forall(sp =>
-            Pruning.partitionTupleMightMatch(p, e.dataFile, sp, schema)))
-      if (survives)
+      if (pred.forall(fileMightMatch(_, e.dataFile, schema, spec)))
         Some((e.dataFile, e.sequenceNumber.getOrElse(0L), specId,
           manifest.schemaId))
       else None
