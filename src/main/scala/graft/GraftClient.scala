@@ -106,11 +106,13 @@ class GraftClient(val config: GraftConfig,
     catalog.tableExists(id(namespace, name))
 
   /** Expose a catalog table to `spark.sql` / `spark.table` under
-    * `viewName` (defaults to the table name) — filter-aware pruning via
-    * [[graft.plans.GraftSQL]]. */
+    * `viewName` (defaults to the table name): a temp view over the
+    * table's DSv2 relation ([[graft.sources.GraftSQL]]) — each query
+    * sees the latest commit, prunes files by its filters and applies
+    * MoR deletes in the reader. */
   def registerSql(spark: org.apache.spark.sql.SparkSession,
       namespace: String, name: String, viewName: String = ""): Unit =
-    graft.plans.GraftSQL.registerTable(spark, table(namespace, name),
+    graft.sources.GraftSQL.registerTable(spark, table(namespace, name),
       if (viewName.isEmpty) name else viewName)
 
   def listTables(namespace: String): Seq[String] =

@@ -1273,11 +1273,11 @@ object IcebergQueries {
       |ORDER BY phase, l_returnflag""".stripMargin
 
   // ------------------------------ SQL façade gates (verdict #7): the
-  // SAME engine tables queried through spark.sql — GraftRelation leaf +
-  // optimizer-rule substitution, native parquet execution.
+  // SAME engine tables queried through spark.sql — a temp view over the
+  // table's DSv2 relation, pruned by the query's pushed filters.
 
   def sql1ScanFilter(s: SparkSession, dir: String): DataFrame = {
-    graft.plans.GraftSQL.registerTable(s, lineitemTable(s, dir),
+    graft.sources.GraftSQL.registerTable(s, lineitemTable(s, dir),
       "g_lineitem")
     s.sql(
       """SELECT l_orderkey, l_linenumber, l_quantity, l_returnflag
@@ -1286,7 +1286,7 @@ object IcebergQueries {
   }
 
   def sql2PartitionPrune(s: SparkSession, dir: String): DataFrame = {
-    graft.plans.GraftSQL.registerTable(s, ordersMonthly(s, dir),
+    graft.sources.GraftSQL.registerTable(s, ordersMonthly(s, dir),
       "g_orders")
     s.sql(
       """SELECT o_orderstatus, COUNT(*) AS n,
@@ -1298,7 +1298,7 @@ object IcebergQueries {
   }
 
   def sql3BucketEq(s: SparkSession, dir: String): DataFrame = {
-    graft.plans.GraftSQL.registerTable(s, lineitemBucketed(s, dir),
+    graft.sources.GraftSQL.registerTable(s, lineitemBucketed(s, dir),
       "g_lineitem_b")
     s.sql(
       """SELECT l_orderkey, l_linenumber, l_quantity FROM g_lineitem_b
@@ -1306,10 +1306,10 @@ object IcebergQueries {
   }
 
   /** SQL over a MoR-mutated table: position-delete files must apply
-    * inside the substituted spark.sql plan. Table construction reuses
+    * inside the spark.sql plan's graft reader. Table construction reuses
     * MutationQueries' m2 build (lineitem MoR-delete of returnflag R). */
   def sql4MorRead(s: SparkSession, dir: String): DataFrame = {
-    graft.plans.GraftSQL.registerTable(s,
+    graft.sources.GraftSQL.registerTable(s,
       MutationQueries.m2Table(s, dir), "g_lineitem_mor")
     s.sql(
       """SELECT l_returnflag, l_linestatus, COUNT(*) AS n
@@ -1565,8 +1565,8 @@ object IcebergQueries {
       .load())
   }
 
-  /** The same content through the Scan API's remapExpr (the
-    * transform()-based element remap) — the other read path. */
+  /** The same content through the Scan API (a staged read of the
+    * planned tasks on the same DSv2 reader). */
   def i22ListEvolutionScan(s: SparkSession, dir: String): DataFrame =
     flattenTags(Scan(listEvolvedTable(s, dir), s).toDF)
 

@@ -1330,13 +1330,17 @@ private[sources] class GraftV2Scan(
     * file-level stats + partition-value pruning then drop files before
     * any is opened — Iceberg's runtime filtering shape. Only partition
     * source columns are advertised (classic DPP); a runtime predicate
-    * that fails to convert prunes nothing, which is always sound. */
+    * that fails to convert prunes nothing, which is always sound. Only
+    * columns the scan OUTPUTS qualify: Spark resolves every advertised
+    * name against the pruned output, and an unresolvable one fails the
+    * query. */
   override def filterAttributes(): Array[
       org.apache.spark.sql.connector.expressions.NamedReference] = {
     val t = source.mutationPin.getOrElse(gtable)
+    val schema = querySchema.getOrElse(t.schema)
     t.spec.fields
-      .flatMap(pf => t.schema.field(pf.sourceId)).map(_.name).distinct
-      .filter(n => full.fieldNames.contains(n))
+      .flatMap(pf => schema.field(pf.sourceId)).map(_.name).distinct
+      .filter(n => required.fieldNames.contains(n))
       .map(org.apache.spark.sql.connector.expressions.Expressions.column)
       .toArray
   }
@@ -1628,7 +1632,7 @@ private[sources] final class EqFilter(
         if (row.isNullAt(ords(j))) null
         else normVal(row.get(ords(j), types(j)))
       }
-      // null keys never match (engine anti-join parity)
+      // null keys never match (SQL equality semantics)
       if (!key.contains(null) &&
           set.contains(ArraySeq.unsafeWrapArray(key))) return false
       i += 1
@@ -1844,8 +1848,7 @@ private[sources] class GraftReaderFactory(
             s"graft source: no delete reader for key set $names under " +
               s"write schema $dsid"))
         // Key of a row read under write-schema convs (`null` =
-        // current types). Null keys never match (parity with the
-        // engine's anti-join).
+        // current types). Null keys never match (SQL equality).
         def keyOf(r: InternalRow, kcs: Array[ReaderConv]): Seq[Any] = {
           val key = Array.tabulate(names.length) { i =>
             if (r.isNullAt(i)) null
@@ -1882,8 +1885,7 @@ private[sources] class GraftReaderFactory(
           // key columns first (column-pruned parquet read), then STREAM
           // each delete file and retain only keys that occur in this
           // task — the kept set bounds by the task's file size, not the
-          // delete files, the same smaller-side bound the engine Scan
-          // path's anti-join enjoys.
+          // delete files.
           val (df, kcs) = dataKeyReader.get
           val present = new java.util.HashSet[Seq[Any]]()
           df(ParquetShim.partitionedFile(gp.path, gp.length)).foreach { r =>
@@ -2015,10 +2017,9 @@ private[sources] object GraftReaderFactory {
     org.apache.spark.sql.types.StructField("pos",
       org.apache.spark.sql.types.LongType)))
 
-  /** Eager per-task equality-delete key sets cap out here (matches the
-    * Scan path's broadcast-side intuition); above it the reader switches
-    * to the data-side-bounded application. Overridable per read via
-    * option `eq-delete-set-max-bytes`. */
+  /** Eager per-task equality-delete key sets cap out here; above it the
+    * reader switches to the data-side-bounded application. Overridable
+    * per read via option `eq-delete-set-max-bytes`. */
   val DefaultEqSetMaxBytes: Long = 64L * 1024 * 1024
 
   /** Telemetry: how many (task, key-set) applications took the bounded

@@ -7,6 +7,27 @@ import org.apache.spark.sql.graftshim.Bridge
 import graft.spec.{Schema, SchemaConverters}
 import graft.table.{FileScanTask, Table}
 
+/** The SQL surface over engine tables: a temp view over the table's
+  * DSv2 relation. Each query plans afresh through [[GraftConnectorTable]]
+  * — refresh (commits after registration are visible), manifest/file
+  * pruning from the pushed filters, statistics from the pruned files
+  * for broadcast planning — and reads through the graft reader, which
+  * applies MoR deletes. Self-joins work: the relation is a
+  * `MultiInstanceRelation`. */
+object GraftSQL {
+
+  /** A DataFrame over the table's DSv2 relation. */
+  def tableDF(spark: SparkSession, table: Table): DataFrame =
+    Bridge.ofRows(spark, DataSourceV2Relation.create(
+      new GraftConnectorTable(table,
+        SchemaConverters.toSparkSchema(table.schema)), None, None))
+
+  /** Expose `table` to `spark.sql` / `spark.table` as `viewName`. */
+  def registerTable(spark: SparkSession, table: Table,
+      viewName: String): Unit =
+    tableDF(spark, table).createOrReplaceTempView(viewName)
+}
+
 /** A staged read: the DSv2 relation over exactly `tasks` of `table`,
   * column names resolved through `querySchema` (the shape of Iceberg's
   * `SparkStagedScan`). The scan applies each task's MoR delete files

@@ -122,7 +122,7 @@ object Mutations {
 
   /** Merge-on-read equality delete (T6 — the reference returns "not yet
     * fully implemented", `table/delete.go:494-501`): write the key
-    * values; the scan anti-joins rows from OLDER sequence numbers.
+    * values; reads drop matching rows from OLDER sequence numbers.
     *
     * Partition scoping: when every partition source column is among the
     * key columns AND every live data manifest was written under the

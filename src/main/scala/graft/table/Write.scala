@@ -125,7 +125,10 @@ object DataWriter {
 
   /** Read back parquet footers under `dir` and build stats-complete
     * DataFile entries (SURVEY S7's "harvest real per-file row counts &
-    * min/max from Parquet footers"). */
+    * min/max from Parquet footers"). Zero-row files are dropped: Spark's
+    * first write task emits a file even when its partition is empty,
+    * and committing it would leave an unprunable, bounds-less entry
+    * every later scan plans. The stray file is left to orphan GC. */
   def harvestDataFiles(conf: Configuration, dir: String, schema: Schema,
       partition: Map[String, Any] = Map.empty,
       nanCounts: Map[String, Map[Int, Long]] = Map.empty): Seq[DataFile] = {
@@ -135,6 +138,7 @@ object DataWriter {
       .filter(s => s.isFile && s.getPath.getName.endsWith(".parquet"))
       .sortBy(_.getPath.getName)
     harvestStatuses(conf, statuses.toSeq, schema, partition, nanCounts)
+      .filter(_.recordCount > 0)
   }
 
   /** Harvest an EXPLICIT file list (executor-written row-level rewrites

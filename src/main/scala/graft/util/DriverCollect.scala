@@ -30,6 +30,9 @@ object DriverCollect {
   /** Session-conf override with a documented default — the pattern for
     * the scale-trade thresholds (local defaults keep the bench
     * comparable; a cluster deployment sets the conf). */
-  def confInt(df: DataFrame, key: String, default: Int): Int =
-    df.sparkSession.conf.get(key, default.toString).toInt
+  def confInt(df: DataFrame, key: String, default: Int): Int = {
+    val v = df.sparkSession.conf.get(key, default.toString)
+    v.toIntOption.getOrElse(throw new IllegalArgumentException(
+      s"conf $key must be an integer, got '$v'"))
+  }
 }

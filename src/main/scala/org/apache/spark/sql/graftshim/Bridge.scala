@@ -13,18 +13,12 @@ object Bridge {
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
 
   /** DataFrame from a raw LogicalPlan (`Dataset.ofRows` is
-    * `private[sql]`; this shim re-exports it for the SQL façade). */
+    * `private[sql]`; this shim re-exports it for the graft relations). */
   def ofRows(spark: org.apache.spark.sql.SparkSession,
       plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan)
       : org.apache.spark.sql.DataFrame =
     org.apache.spark.sql.classic.Dataset.ofRows(
       spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession], plan)
-
-  /** The analyzed plan behind a DataFrame. */
-  def analyzed(df: org.apache.spark.sql.DataFrame)
-      : org.apache.spark.sql.catalyst.plans.logical.LogicalPlan =
-    df.asInstanceOf[org.apache.spark.sql.classic.Dataset[_]]
-      .queryExecution.analyzed
 
   /** V2 connector `Predicate` → v1 `sources.Filter` (the
     * `private[sql]` converter Spark itself uses) — lets runtime

@@ -3,11 +3,13 @@ package graft.plans
 import java.nio.file.Files
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.execution.FileSourceScanExec
+import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
+import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
 
 import graft.SparkTestSession
 import graft.catalog._
 import graft.io.HadoopFileIO
+import graft.sources.GraftSQL
 import graft.spec._
 import graft.table._
 
@@ -28,9 +30,9 @@ class CountingFileIO extends HadoopFileIO {
   }.sum
 }
 
-/** spark.sql / spark.table over engine tables: the GraftRelation leaf +
-  * optimizer-rule substitution must deliver filter-aware manifest/file
-  * pruning and MoR semantics, executing on the native parquet reader. */
+/** spark.sql / spark.table over engine tables: the temp view over the
+  * table's DSv2 relation must deliver filter-aware manifest/file
+  * pruning, MoR semantics and per-query freshness. */
 class SqlFacadeSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
 
@@ -50,10 +52,15 @@ class SqlFacadeSpec extends AnyFunSuite {
       .toDF("id", "name", "email", "created_at")
   }
 
+  /** Data files the graft scans of `df`'s plan read (one input
+    * partition per file). */
   private def scannedFiles(df: DataFrame): Seq[String] =
     df.asInstanceOf[org.apache.spark.sql.classic.Dataset[_]]
       .queryExecution.executedPlan.collect {
-        case s: FileSourceScanExec => s.relation.location.inputFiles.toSeq
+        case s: BatchScanExec => s.inputPartitions.collect {
+          case p: graft.sources.GraftInputPartition => p.path
+          case k: graft.sources.GraftKeyedInputPartition => k.p.path
+        }
       }.flatten
 
   test("spark.sql filter prunes files via the engine's stats") {
@@ -122,26 +129,27 @@ class SqlFacadeSpec extends AnyFunSuite {
       s"partition-tuple pruning must reach the SQL path: $files")
   }
 
-  test("computeStats is counter-based: zero metadata reads, even repeated") {
-    val dir = Files.createTempDirectory("graft-sqlstats-").toString
-    val cat = new LocalCatalog(dir)
-    cat.createNamespace(Seq("db"))
-    val io = new CountingFileIO
-    var t = Table.create(cat, TableIdentifier(Seq("db"), "sqlstats"),
-      Fixtures4.usersSchema, io = io)
-    t = TableOps.append(t, usersDf(1 to 10))
-    val rel = GraftSQL.tableDF(spark, t)
-      .asInstanceOf[org.apache.spark.sql.classic.Dataset[_]]
-      .queryExecution.logical.collectFirst { case r: GraftRelation => r }.get
-    io.reset()
-    // Catalyst may call computeStats several times while planning one
-    // query; none of them may open manifests (summary-counter path)
-    val sizes = (1 to 5).map(_ => rel.computeStats().sizeInBytes).distinct
-    assert(io.totalReads == 0,
-      s"stats must come from summary counters, saw ${io.totalReads} reads")
-    assert(sizes.size == 1 && sizes.head > 0 &&
-      sizes.head < BigInt(Long.MaxValue / 8),
-      s"real (not conservative-unknown) size expected: $sizes")
+  test("a small registered table broadcasts in a join") {
+    var small = freshTable("sqlsmall")
+    small = TableOps.append(small, usersDf(1 to 5))
+    GraftSQL.registerTable(spark, small, "users_small")
+    // the other side is far over the broadcast threshold
+    spark.range(0, 200000).selectExpr("id", "id % 7 AS v")
+      .createOrReplaceTempView("big_ids")
+    val q = spark.sql(
+      """SELECT COUNT(*) AS n FROM big_ids b JOIN users_small s
+        |ON b.id = s.id""".stripMargin)
+    assert(q.collect().head.getLong(0) == 5)
+    // the plan as planned from statistics, before any adaptive rewrite
+    val plan = q.asInstanceOf[org.apache.spark.sql.classic.Dataset[_]]
+      .queryExecution.executedPlan match {
+        case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
+          a.inputPlan
+        case p => p
+      }
+    val joins = plan.collect { case j: BroadcastHashJoinExec => j }
+    assert(joins.nonEmpty,
+      s"the scan's statistics must let the small side broadcast:\n$plan")
   }
 
   test("planning a SQL query reads the manifest list at most once") {

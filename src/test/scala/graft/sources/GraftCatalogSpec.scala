@@ -317,6 +317,26 @@ class GraftCatalogSpec extends AnyFunSuite {
     }
   }
 
+  test("a join on a non-partition column plans with the partition " +
+      "column pruned from the scan") {
+    withCatalog("dppout") { (c, dir) =>
+      spark.sql(s"CREATE NAMESPACE $c.db")
+      spark.sql(s"CREATE TABLE $c.db.fact (id BIGINT, cat STRING, " +
+        "v DOUBLE) PARTITIONED BY (cat)")
+      spark.sql(s"INSERT INTO $c.db.fact SELECT id, " +
+        "chr(97 + CAST(id % 3 AS INT)), id * 1.5 FROM range(30)")
+      spark.sql(s"CREATE TABLE $c.db.dim (k BIGINT, label STRING)")
+      spark.sql(s"INSERT INTO $c.db.dim VALUES (4, 'keep'), (5, 'other')")
+      // dynamic pruning resolves the fact scan's runtime-filter columns
+      // against its OUTPUT; `cat` is not read here
+      val got = spark.sql(
+        s"""SELECT f.v FROM $c.db.fact f JOIN $c.db.dim d ON f.id = d.k
+           |WHERE d.label = 'keep'""".stripMargin)
+        .collect().map(_.getDouble(0)).toSeq
+      assert(got == Seq(6.0))
+    }
+  }
+
   test("CTAS and DataFrameWriterV2 land real snapshots") {
     withCatalog("ctas") { (c, dir) =>
       spark.sql(s"CREATE NAMESPACE $c.db")

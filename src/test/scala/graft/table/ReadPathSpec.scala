@@ -22,12 +22,11 @@ class ReadPathSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
   import ReadPathSpec._
 
-  /** Every path that reads tasks into rows, by name. */
+  /** Every path that reads tasks into rows, by name: the staged DSv2
+    * relation behind `Scan.readTasks`. */
   private def paths: Seq[(String, Reader)] = Seq(
-    "anti-join" -> ((t, schema, tasks) =>
-      Scan(t, spark).readTasks(schema, tasks)),
     "dsv2" -> ((t, schema, tasks) =>
-      graft.sources.StagedRelation(spark, t, schema, tasks)))
+      Scan(t, spark).readTasks(schema, tasks)))
 
   private def freshTable(name: String, schema: Schema,
       spec: PartitionSpec = PartitionSpec.unpartitioned): Table = {

@@ -401,13 +401,17 @@ class NaNStatsSpec extends AnyFunSuite {
     val distinctSets = tasks.map(_.deleteFiles
       .filter(_.file.content == FileContent.EqualityDeletes)
       .map(_.file.filePath).toSet).filter(_.nonEmpty).distinct.size
-    assert(distinctSets > Scan.MaxEqDeleteGroups,
-      s"precondition: $distinctSets scoped delete sets exceed the cap")
+    assert(distinctSets > 8,
+      s"precondition: $distinctSets scoped delete sets")
 
+    // every task, whatever its delete set, reads in ONE graft scan
     val df = Scan(t, spark).toDF
-    val leaves = df.queryExecution.executedPlan.collectLeaves().size
-    assert(leaves <= 10,
-      s"coarse path must keep the plan bounded, got $leaves leaves")
+    val scans = df.queryExecution.executedPlan.collectLeaves()
+    assert(scans.size == 1 && scans.forall {
+      case b: org.apache.spark.sql.execution.datasources.v2.BatchScanExec =>
+        b.scan.description().startsWith("graft:")
+      case _ => false
+    }, s"one graft BatchScanExec expected, got $scans")
 
     val got = df.select("id").collect().map(_.getLong(0)).toSet
     val expected = (for {
@@ -415,11 +419,6 @@ class NaNStatsSpec extends AnyFunSuite {
       .toSet -- (0L until nDays).map(_ * 100).toSet ++ Set(0L, 500L)
     assert(got == expected,
       "deletes applied, re-inserted keys survive the sequence rule")
-
-    // exact path still in force under the cap
-    val small = Scan(t, spark).option("max-eq-delete-groups", "64").toDF
-    assert(small.select("id").collect().map(_.getLong(0)).toSet == expected,
-      "per-group exact path agrees with the coarse path")
   }
 }
 

@@ -31,6 +31,36 @@ class PartitionedWriteSpec extends AnyFunSuite {
     }.toDF("id", "name", "email", "created_at")
   }
 
+  test("appends never commit zero-row data files") {
+    def liveFiles(t: Table) = Scan(t, spark).planFiles().map(_.file)
+    def parquetOnDisk(t: Table): Int = {
+      val data = new java.io.File(
+        Scan.normPath(t.metadata.location).stripSuffix("/") + "/data")
+      Files.walk(data.toPath).filter(_.toString.endsWith(".parquet"))
+        .count().toInt
+    }
+    // partition 0 of the frame (ids 0..9) is empty after the filter;
+    // an unpartitioned write's first task still emits a 0-row file
+    val frame = spark.range(0, 40, 1, 4).where(col("id") >= 10)
+      .select(col("id"), concat(lit("user_"), col("id")).as("name"),
+        lit(null).cast("string").as("email"),
+        timestamp_seconds(col("id") + 1704067200L).as("created_at"))
+    for ((name, spec) <- Seq(
+        "zero_unpart" -> PartitionSpec.unpartitioned,
+        "zero_daily" -> PartitionSpec.builder(0).day(4, "created_day")
+          .build())) {
+      val t = TableOps.append(freshTable(name, spec), frame)
+      val files = liveFiles(t)
+      assert(files.nonEmpty && files.forall(_.recordCount > 0),
+        s"$name: committed a 0-row file: ${files.map(_.recordCount)}")
+      assert(files.map(_.recordCount).sum == 30)
+      assert(Scan(t, spark).toDF.count() == 30)
+      if (spec.isUnpartitioned)
+        assert(parquetOnDisk(t) > files.size,
+          s"$name: precondition — the writer left a 0-row file behind")
+    }
+  }
+
   test("day-partitioned append: one file per day, tuple recorded (S8)") {
     val spec = PartitionSpec.builder(0).day(4, "created_day").build()
     var t = freshTable("daily", spec)
