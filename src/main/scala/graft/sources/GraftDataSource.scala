@@ -1019,17 +1019,6 @@ private[sources] object BatchPlanning {
           keySchema), if (convs0.forall(_.code == 0)) null else convs0)
       }).toMap
 
-    // Field-ID remapped read per write schema: files written before a
-    // rename/widen are read with their OWN column names and types, rows
-    // then promote positionally to the current schema — the DSv2
-    // equivalent of the Scan API's per-write-schema remap, so SQL reads
-    // survive schema evolution instead of tripping a rename guard.
-    val defaultFunc = ParquetShim.buildReaderFunc(spark, full, extended)
-    // row-group-skipping variant for tasks where early row drop is
-    // sound (no position deletes — those count file row positions)
-    val filteredFunc =
-      if (filters.isEmpty) defaultFunc
-      else ParquetShim.buildReaderFunc(spark, full, extended, filters)
     // columnar batches — the zero-copy handoff whole-stage codegen
     // consumes — require EVERY task to qualify (Spark forbids mixing
     // columnar and row partitions in one scan). Qualification is wider
@@ -1111,6 +1100,17 @@ private[sources] object BatchPlanning {
     val batchEnabled = !emitFile && tasks.forall(taskColumnar) &&
       ParquetShim.supportsBatch(spark, required) &&
       (!anyEq || ParquetShim.supportsBatch(spark, extended))
+    // Row readers serve only scans that cannot go columnar, and every
+    // reader build broadcasts the Hadoop conf — a columnar scan (the
+    // common point lookup) builds none.
+    val defaultFunc =
+      if (batchEnabled) null
+      else ParquetShim.buildReaderFunc(spark, full, extended)
+    // row-group-skipping variant for tasks where early row drop is
+    // sound (no position deletes — those count file row positions)
+    val filteredFunc =
+      if (batchEnabled || filters.isEmpty) defaultFunc
+      else ParquetShim.buildReaderFunc(spark, full, extended, filters)
     val batchFunc =
       if (!batchEnabled) None
       else Some(ParquetShim.buildBatchReaderFunc(spark, full, required,
@@ -1156,6 +1156,10 @@ private[sources] object BatchPlanning {
         sid -> ParquetShim.buildBatchReaderFunc(spark, fileFull, fileExt,
           Nil)
       }
+    // Field-ID remapped read per write schema: files written before a
+    // rename/widen are read with their OWN column names and types, rows
+    // then promote positionally to the current schema, so reads survive
+    // schema evolution instead of tripping a rename guard.
     val oldSchemaIds = tasks.map(_.schemaId).distinct
       .filter(sid => sid != current.schemaId &&
         t.metadata.schemaById(sid).isDefined)
@@ -1192,7 +1196,9 @@ private[sources] object BatchPlanning {
         val fileRequired = StructType(pairs.map(_._1))
         val convs = pairs.map(_._2)
         val fileFull = SchemaConverters.toSparkSchema(fileSchema)
-        sid -> (ParquetShim.buildReaderFunc(spark, fileFull, fileRequired),
+        // a columnar scan only asks WHICH ids remap (see defaultFunc)
+        sid -> (if (batchEnabled) null
+          else ParquetShim.buildReaderFunc(spark, fileFull, fileRequired),
           convs)
       }.toMap
 
@@ -1642,6 +1648,8 @@ private[sources] final class EqFilter(
 }
 
 private[sources] class GraftReaderFactory(
+    /** Row read of the extended schema; null when the scan is
+      * columnar (`batchReadFunc` defined — no row reader is asked). */
     readFunc: PartitionedFile => Iterator[InternalRow],
     /** Per-write-schema remapped readers + positional promotions for
       * files written under an older schema id. */

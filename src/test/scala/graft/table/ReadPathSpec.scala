@@ -10,7 +10,7 @@ import graft.catalog._
 import graft.io.HadoopFileIO
 import graft.spec._
 
-/** Differential net over the MoR fixtures: every read path that turns
+/** Differential net over the MoR fixtures: the read path that turns
   * `FileScanTask`s into rows must produce exactly the rows a plain
   * Spark computation of the same table state produces — position
   * deletes, sequence-scoped and partition-scoped equality deletes,
@@ -20,13 +20,12 @@ import graft.spec._
   * one plan, and a metadata-answerable count of an old snapshot. */
 class ReadPathSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
-  import ReadPathSpec._
 
-  /** Every path that reads tasks into rows, by name: the staged DSv2
-    * relation behind `Scan.readTasks`. */
-  private def paths: Seq[(String, Reader)] = Seq(
-    "dsv2" -> ((t, schema, tasks) =>
-      Scan(t, spark).readTasks(schema, tasks)))
+  /** The one path that reads tasks into rows: the staged DSv2 relation
+    * behind `Scan.readTasks`. */
+  private def read(t: Table, schema: Schema,
+      tasks: Seq[FileScanTask]): DataFrame =
+    Scan(t, spark).readTasks(schema, tasks)
 
   private def freshTable(name: String, schema: Schema,
       spec: PartitionSpec = PartitionSpec.unpartitioned): Table = {
@@ -40,16 +39,14 @@ class ReadPathSpec extends AnyFunSuite {
   private def rowsOf(df: DataFrame): Seq[Row] =
     df.collect().toSeq.sortBy(_.getLong(0))
 
-  /** Read `tasks` through every path; each must equal `expected`. */
-  private def assertPaths(what: String, t: Table, schema: Schema,
+  /** Read `tasks`; the rows must equal `expected`. */
+  private def assertRead(what: String, t: Table, schema: Schema,
       tasks: Seq[FileScanTask], expected: DataFrame): Unit = {
     val want = rowsOf(expected)
     assert(want.nonEmpty, s"$what: fixture must expect rows")
-    paths.foreach { case (name, read) =>
-      val got = rowsOf(read(t, schema, tasks))
-      assert(got == want, s"$what via $name:\n got ${got.mkString(
-        "\n     ")}\nwant ${want.mkString("\n     ")}")
-    }
+    val got = rowsOf(read(t, schema, tasks))
+    assert(got == want, s"$what:\n got ${got.mkString(
+      "\n     ")}\nwant ${want.mkString("\n     ")}")
   }
 
   private def usersDf(ids: Seq[Int]): DataFrame = {
@@ -70,7 +67,7 @@ class ReadPathSpec extends AnyFunSuite {
     val tasks = Scan(t, spark).planFiles()
     assert(tasks.exists(_.deleteFiles.exists(
       _.file.content == FileContent.PositionDeletes)))
-    assertPaths("position deletes", t, t.schema, tasks,
+    assertRead("position deletes", t, t.schema, tasks,
       usersDf((4 to 20).filterNot(_ == 15)))
   }
 
@@ -100,7 +97,7 @@ class ReadPathSpec extends AnyFunSuite {
       .filter(_.file.content == FileContent.EqualityDeletes)
       .map(_.file.filePath).toSet).filter(_.nonEmpty).distinct.size
     assert(distinctSets > 8, s"precondition: $distinctSets delete sets")
-    assertPaths("partition-scoped eq deletes", t, t.schema, tasks,
+    assertRead("partition-scoped eq deletes", t, t.schema, tasks,
       rows(all.filterNot(deleted.contains) ++ reinserted))
   }
 
@@ -139,7 +136,7 @@ class ReadPathSpec extends AnyFunSuite {
     val want = (1 to 25).filterNot(Set(3, 5, 13))
       .map(i => (i.toLong, (i % 10).toLong, s"n$i", i * 0.5))
       .toDF("id", "key", "label", "score")
-    assertPaths("evolved", t, t.schema, tasks, want)
+    assertRead("evolved", t, t.schema, tasks, want)
   }
 
   test("time travel reads an older snapshot under its own schema") {
@@ -151,7 +148,7 @@ class ReadPathSpec extends AnyFunSuite {
     val want = (1 to 20).filterNot(Set(3, 13))
       .map(i => (i.toLong, i % 10, s"n$i", i * 0.5f))
       .toDF("id", "k", "name", "score")
-    assertPaths("time travel", t, oldSchema, scan.planFiles(), want)
+    assertRead("time travel", t, oldSchema, scan.planFiles(), want)
     assert(rowsOf(scan.toDF) == rowsOf(want))
   }
 
@@ -181,7 +178,7 @@ class ReadPathSpec extends AnyFunSuite {
     t = TableOps.append(t, evolved(7 to 9, withC = true))
     val tasks = Scan(t, spark).planFiles()
     assert(tasks.map(_.schemaId).distinct.size == 2, "precondition")
-    assertPaths("list<struct> evolution", t, t.schema, tasks,
+    assertRead("list<struct> evolution", t, t.schema, tasks,
       evolved(1 to 6, withC = false).unionByName(evolved(7 to 9, true)))
   }
 
@@ -196,12 +193,9 @@ class ReadPathSpec extends AnyFunSuite {
     assert(before.map(_.file.filePath) == after.map(_.file.filePath) &&
       after.exists(_.deleteFiles.nonEmpty),
       "precondition: same data file, different delete sets")
-    paths.foreach { case (name, read) =>
-      val killed = read(t, t.schema, before)
-        .exceptAll(read(t, t.schema, after))
-      assert(rowsOf(killed) == rowsOf(usersDf(Seq(3))),
-        s"before minus after via $name")
-    }
+    val killed = read(t, t.schema, before)
+      .exceptAll(read(t, t.schema, after))
+    assert(rowsOf(killed) == rowsOf(usersDf(Seq(3))), "before minus after")
     val changes = Changelog.between(t, spark, s0, s1)
     assert(changes.select("id", Changelog.ChangeType).collect()
       .map(r => (r.getLong(0), r.getString(1))).toSeq ==
@@ -214,15 +208,9 @@ class ReadPathSpec extends AnyFunSuite {
     val s0 = t.currentSnapshot.get.snapshotId
     t = TableOps.append(t, usersDf(11 to 15))
     val tasks = Scan(t, spark).useSnapshot(s0).planFiles()
-    paths.foreach { case (name, read) =>
-      assert(read(t, t.schema, tasks).count() == 10, s"count via $name")
-    }
+    assert(read(t, t.schema, tasks).count() == 10)
     assert(Scan(t, spark).useSnapshot(s0).toDF.count() == 10)
     assert(Scan(t, spark).useSnapshot(s0).toDF.where(col("id") > 5)
       .count() == 5)
   }
-}
-
-object ReadPathSpec {
-  type Reader = (Table, Schema, Seq[FileScanTask]) => DataFrame
 }
