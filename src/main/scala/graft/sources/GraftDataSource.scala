@@ -1498,7 +1498,25 @@ private[sources] class GraftV2Scan(
     }
   }
 
-  private[sources] def batchReaderFactory(): PartitionReaderFactory =
+  /** The factory built for the current runtime filter. Planning asks
+    * for it on every copy of the scan's `BatchScanExec` (each copy
+    * re-evaluates its lazy factory), and every build broadcasts the
+    * Hadoop conf once per reader function. */
+  @volatile private var factoryMemo
+      : Option[(Option[Expr], PartitionReaderFactory)] = None
+
+  private[sources] def batchReaderFactory(): PartitionReaderFactory = {
+    val re = runtimeExpr
+    factoryMemo match {
+      case Some((memoRe, f)) if memoRe == re => f
+      case _ =>
+        val f = newBatchReaderFactory()
+        factoryMemo = Some((re, f))
+        f
+    }
+  }
+
+  private def newBatchReaderFactory(): PartitionReaderFactory =
     BatchPlanning.readerFactory(spark, batchTable, effectiveTasks, full,
       required, emitFile, allFilters,
       eqSetMaxBytes = Option(options.get("eq-delete-set-max-bytes"))
