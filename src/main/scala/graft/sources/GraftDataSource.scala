@@ -302,8 +302,7 @@ private[sources] class GraftConnectorTable(
 
   override def name(): String =
     (gtable.id.namespace :+ gtable.id.name).mkString(".") +
-      pinnedSnapshot.map(s => s"@$s").getOrElse("") +
-      staged.map(_ => " (staged)").getOrElse("")
+      pinnedSnapshot.map(s => s"@$s").getOrElse("")
   override def schema(): StructType = sparkSchema
   override def partitioning():
       Array[org.apache.spark.sql.connector.expressions.Transform] =
@@ -317,11 +316,14 @@ private[sources] class GraftConnectorTable(
       TableCapability.OVERWRITE_BY_FILTER).asJava
 
   /** The schema the relation's column names resolve through: the
-    * staged schema, the pinned snapshot's, else None (the current
-    * schema of whichever table version a scan reads). */
-  private[sources] val querySchema: Option[graft.spec.Schema] =
+    * staged schema, the pinned snapshot's, else the table's schema as
+    * loaded — `sparkSchema` was built from it, so a column renamed
+    * after loading still reaches its field id instead of null-filling
+    * (a registered SQL view outlives many commits). */
+  private[sources] val querySchema: graft.spec.Schema =
     staged.map(_._1)
       .orElse(pinnedSnapshot.map(gtable.metadata.schemaForSnapshot))
+      .getOrElse(gtable.schema)
 
   private[sources] def newScan(t: Table, pushed: Option[Expr]): Scan = {
     val base = pinnedSnapshot.foldLeft(Scan(t, SparkSession.active))(
@@ -332,14 +334,44 @@ private[sources] class GraftConnectorTable(
   /** The one source of a scan's (table, tasks): the staged list as
     * given, else refresh + `planFiles` under the pin and the pushed
     * filter. A row-level operation in flight on this instance reads
-    * its pinned snapshot instead of refreshing (see [[mutationPin]]). */
+    * its pinned snapshot instead of refreshing (see [[mutationPin]]).
+    * A refresh that moved the schema is read through [[querySchema]]
+    * by field id when [[readableThrough]] allows, else the scan reads
+    * the table as loaded: a stale read beats a column null-filled or
+    * mis-decoded, or an equality delete applied on part of its key. */
   private[sources] def planTasks(
       pushed: Option[Expr]): (Table, Seq[FileScanTask]) = staged match {
     case Some((_, tasks)) => (gtable, tasks)
     case None =>
       val t = mutationPin.getOrElse(
         try gtable.refresh() catch { case _: Exception => gtable })
-      (t, newScan(t, pushed).planFiles())
+      if (pinnedSnapshot.isDefined ||
+          t.schema.schemaId == querySchema.schemaId)
+        (t, newScan(t, pushed).planFiles())
+      else readableThrough(t)
+        .getOrElse((gtable, newScan(gtable, pushed).planFiles()))
+  }
+
+  /** `t`'s tasks when `t`, whose schema moved past [[querySchema]],
+    * still reads correctly through it: every query column is still
+    * there without a type change (renames and added columns are fine),
+    * and no planned equality delete keys on a column the query schema
+    * lacks (the reader could not decode that key). Planned without the
+    * pushed filter, whose names are the query schema's, not `t`'s:
+    * Spark applies every pushed filter to the rows anyway. */
+  private def readableThrough(
+      t: Table): Option[(Table, Seq[FileScanTask])] = {
+    val carried = querySchema.fields.forall(q =>
+      t.schema.fields.find(_.id == q.id).exists(f =>
+        BatchPlanning.promotionFree(
+          SchemaConverters.toSparkType(q.fieldType), q.fieldType,
+          f.fieldType)))
+    lazy val tasks = newScan(t, None).planFiles()
+    if (carried && tasks.forall(_.deleteFiles.forall(d =>
+        d.file.content != FileContent.EqualityDeletes ||
+          d.file.equalityIds.forall(querySchema.field(_).isDefined))))
+      Some((t, tasks))
+    else None
   }
 
   /** Set when a row-level operation (UPDATE/MERGE/DELETE) is planned on
@@ -360,13 +392,12 @@ private[sources] class GraftConnectorTable(
     // fail loud. A subset/reordering of real columns is legitimate
     // manual pruning. Writes never pass this point (V1 bridge), so
     // SaveMode semantics on mismatched frames are unaffected.
-    val resolution = querySchema.getOrElse(gtable.schema)
-    val known = resolution.fields.map(_.name.toLowerCase).toSet
+    val known = querySchema.fields.map(_.name.toLowerCase).toSet
     val unknown = sparkSchema.fieldNames.filterNot(n =>
       known.contains(n.toLowerCase))
     if (unknown.nonEmpty) throw new IllegalArgumentException(
       s"graft source: schema names ${unknown.mkString(", ")} not in " +
-        s"table ${gtable.id} (columns: ${resolution.fields.map(_.name)
+        s"table ${gtable.id} (columns: ${querySchema.fields.map(_.name)
           .mkString(", ")})")
     new GraftScanBuilder(this, sparkSchema, options)
   }
@@ -515,7 +546,7 @@ private[sources] class GraftWriteBuilder(
   * the scan — partial conversion is always sound. Column pruning feeds
   * the parquet `requiredSchema` (ReadSchema in explain). */
 private[sources] class GraftScanBuilder(
-    source: GraftConnectorTable, full: StructType,
+    private[sources] val source: GraftConnectorTable, full: StructType,
     options: CaseInsensitiveStringMap)
     extends ScanBuilder
     with SupportsPushDownFilters with SupportsPushDownRequiredColumns
@@ -557,8 +588,7 @@ private[sources] class GraftScanBuilder(
 
   private def topField(name: Array[String]): Option[graft.spec.NestedField] =
     if (name.length != 1) None
-    else source.querySchema.getOrElse(source.gtable.schema).fields
-      .find(_.name == name(0))
+    else source.querySchema.fields.find(_.name == name(0))
 
   private def colOf(e: org.apache.spark.sql.connector.expressions.Expression)
       : Option[graft.spec.NestedField] = e match {
@@ -1269,10 +1299,10 @@ private[sources] class GraftV2Scan(
     /** The owning connector table: the scan's one source of (table,
       * tasks) — refresh + plan, or a staged task list — and of the
       * schema its names resolve through. */
-    source: GraftConnectorTable,
+    private[sources] val source: GraftConnectorTable,
     full: StructType,
     required: StructType,
-    pushed: Option[Expr],
+    private[sources] val pushed: Option[Expr],
     options: CaseInsensitiveStringMap,
     emitFile: Boolean = false,
     /** EVERY filter Spark pushed (not just the pruning-convertible
@@ -1295,10 +1325,9 @@ private[sources] class GraftV2Scan(
     * staged scan's key carries every staged data and delete file: two
     * staged reads of the same data files under different delete sets
     * (a changelog's before/after pair) must never compare equal. */
-  private def gtable: Table = source.gtable
   private lazy val eqKey = (
-    gtable.metadata.location,
-    gtable.metadata.currentSnapshot.map(_.snapshotId),
+    source.gtable.metadata.location,
+    source.gtable.metadata.currentSnapshot.map(_.snapshotId),
     source.pinnedSnapshot,
     source.staged.map { case (schema, tasks) =>
       (schema.schemaId, tasks.map(t =>
@@ -1342,10 +1371,10 @@ private[sources] class GraftV2Scan(
     * query. */
   override def filterAttributes(): Array[
       org.apache.spark.sql.connector.expressions.NamedReference] = {
-    val t = source.mutationPin.getOrElse(gtable)
-    val schema = querySchema.getOrElse(t.schema)
+    val t = source.mutationPin.getOrElse(source.gtable)
     t.spec.fields
-      .flatMap(pf => schema.field(pf.sourceId)).map(_.name).distinct
+      .flatMap(pf => source.querySchema.field(pf.sourceId))
+      .map(_.name).distinct
       .filter(n => required.fieldNames.contains(n))
       .map(org.apache.spark.sql.connector.expressions.Expressions.column)
       .toArray
@@ -1366,23 +1395,16 @@ private[sources] class GraftV2Scan(
     if (emitFile) StructType(required.fields :+ GraftMetaColumns.FileField)
     else required
   override def description(): String =
-    s"graft:${(gtable.id.namespace :+ gtable.id.name).mkString(".")} " +
+    s"graft:${(source.gtable.id.namespace :+ source.gtable.id.name)
+      .mkString(".")} " +
       s"pushed=[${pushed.getOrElse("")}]"
 
   override def toBatch: Batch = new GraftBatch(this)
   override def toMicroBatchStream(
       checkpointLocation: String): MicroBatchStream =
-    new GraftMicroBatchStream(gtable, this, options)
+    new GraftMicroBatchStream(source.gtable, this, options)
 
   private def spark: SparkSession = SparkSession.active
-
-  private[sources] def newScan(t: Table): Scan = source.newScan(t, pushed)
-
-  /** For pinned (VERSION/TIMESTAMP AS OF) and staged scans,
-    * `full`/`required` carry THAT schema's column names — resolution
-    * inside [[BatchPlanning]] must go through it, not the current
-    * one, or a later rename/drop silently null-fills. */
-  private def querySchema: Option[graft.spec.Schema] = source.querySchema
 
   /** Batch reads take their tasks ONCE from the source (table + task
     * list shared between planInputPartitions and createReaderFactory
@@ -1415,10 +1437,9 @@ private[sources] class GraftV2Scan(
   private def effectiveTasks: Seq[FileScanTask] = runtimeExpr match {
     case None => batchTasks
     case Some(re) =>
-      val schema = querySchema.getOrElse(batchTable.schema)
       val pred = re.simplify
       batchTasks.filter(task => Scan.fileMightMatch(pred, task.file,
-        schema, batchTable.metadata.specById(task.specId)))
+        source.querySchema, batchTable.metadata.specById(task.specId)))
   }
 
   /** Storage-partitioned joins: a per-task partition KEY extractor,
@@ -1486,7 +1507,8 @@ private[sources] class GraftV2Scan(
 
   private[sources] def batchPartitions(): Array[InputPartition] = {
     val tasks = effectiveTasks
-    val parts = BatchPlanning.partitions(batchTable, tasks, querySchema)
+    val parts = BatchPlanning.partitions(batchTable, tasks,
+      Some(source.querySchema))
     spjKeyer match {
       case Some(keyer) if !emitFile &&
           tasks.forall(_.specId == batchTable.spec.specId) =>
@@ -1535,7 +1557,7 @@ private[sources] class GraftV2Scan(
           parsed
         }
         .getOrElse(GraftReaderFactory.DefaultEqSetMaxBytes),
-      querySchema = querySchema)
+      querySchema = Some(source.querySchema))
 
   /** Last-planned micro-batch (table + tasks), shared between
     * `planInputPartitions` and `createReaderFactory` exactly like the
@@ -1558,13 +1580,13 @@ private[sources] class GraftV2Scan(
     else
       BatchPlanning.readerFactory(spark, planned._1, planned._2, full,
         required, emitFile = false,
-        querySchema = querySchema)
+        querySchema = Some(source.querySchema))
   }
 
   private[sources] def toStreamPartitions(
       t: Table, tasks: Seq[FileScanTask]): Array[InputPartition] = {
     streamPlanned = (t, tasks)
-    BatchPlanning.partitions(t, tasks, querySchema)
+    BatchPlanning.partitions(t, tasks, Some(source.querySchema))
   }
 }
 
@@ -2122,15 +2144,16 @@ private[sources] class GraftMicroBatchStream(
     if (plans.size > 8) plans.clear()
     plans.getOrElseUpdate((sid, isInitial), {
       val base =
-        if (isInitial) scan.newScan(t).useSnapshot(sid)
+        if (isInitial) scan.source.newScan(t, scan.pushed).useSnapshot(sid)
         else t.snapshotById(sid).flatMap(_.parentSnapshotId) match {
           case Some(p) =>
-            val sc = scan.newScan(t).appendsBetween(p, sid)
+            val sc =
+              scan.source.newScan(t, scan.pushed).appendsBetween(p, sid)
             if (skipOverwrites)
               sc.option("incremental-skip-overwrites", "true")
             else sc
           case None => // root snapshot: its appends ARE its content
-            scan.newScan(t).useSnapshot(sid)
+            scan.source.newScan(t, scan.pushed).useSnapshot(sid)
         }
       base.planFiles().sortBy(_.file.filePath)
     })

@@ -12,7 +12,11 @@ import graft.table.{FileScanTask, Table}
   * — refresh (commits after registration are visible), manifest/file
   * pruning from the pushed filters, statistics from the pruned files
   * for broadcast planning — and reads through the graft reader, which
-  * applies MoR deletes. Self-joins work: the relation is a
+  * applies MoR deletes. The view's column names resolve through the
+  * schema at registration, by field id, so renames since then read
+  * through; a drop or type change of a view column (or an equality
+  * delete keyed on a column the view lacks) reads the table as
+  * registered. Self-joins work: the relation is a
   * `MultiInstanceRelation`. */
 object GraftSQL {
 

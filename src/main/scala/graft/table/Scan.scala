@@ -1,6 +1,6 @@
 package graft.table
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions.col
 
 import graft.spec._
@@ -336,30 +336,27 @@ class Scan private (
       tasks: Seq[FileScanTask]): DataFrame =
     graft.sources.StagedRelation(spark, table, schema, tasks)
 
-  /** Key columns of an equality-delete group, resolved BY FIELD ID
-    * through the delete files' write schema: (query field, file field)
-    * pairs. A key renamed or type-promoted after the deletes were
+  /** Equality-key columns resolved BY FIELD ID through the write
+    * schema of the files that store them: (query field, file field)
+    * pairs. A key renamed or type-promoted after the files were
     * written still applies — reading by current name would miss the
     * stored column. */
   private def eqKeyPairs(schema: Schema, fieldIds: Seq[Int],
-      deleteSchemaId: Int): Seq[(NestedField, NestedField)] = {
-    val delSchema =
-      if (deleteSchemaId >= 0)
-        table.metadata.schemaById(deleteSchemaId).getOrElse(schema)
-      else schema
+      writeSchemaId: Int): Seq[(NestedField, NestedField)] = {
+    val written = table.metadata.schemaById(writeSchemaId).getOrElse(schema)
     fieldIds.flatMap(id => schema.field(id)).map { qf =>
-      val ff = delSchema.field(qf.id).getOrElse(
+      val ff = written.field(qf.id).getOrElse(
         throw new IllegalStateException(
           s"graft: equality-delete key (field id ${qf.id}) is missing " +
-            s"from the delete file's write schema (id $deleteSchemaId)"))
+            s"from the write schema (id $writeSchemaId) of its files"))
       (qf, ff)
     }
   }
 
-  /** Read an equality-delete group's key columns, surfaced under
-    * CURRENT names and types. */
+  /** `paths`' stored key columns surfaced under the query fields'
+    * names and types, then `extra`. */
   private def eqKeyDf(pairs: Seq[(NestedField, NestedField)],
-      paths: Seq[String]): DataFrame = {
+      paths: Seq[String], extra: Column*): DataFrame = {
     import graft.spec.SchemaConverters.toSparkType
     val fileKeySchema = org.apache.spark.sql.types.StructType(pairs.map {
       case (_, ff) => org.apache.spark.sql.types.StructField(
@@ -367,7 +364,8 @@ class Scan private (
     })
     spark.read.schema(fileKeySchema).parquet(paths: _*)
       .select(pairs.map { case (qf, ff) =>
-        col(ff.name).cast(toSparkType(qf.fieldType)).as(qf.name) }: _*)
+        col(ff.name).cast(toSparkType(qf.fieldType)).as(qf.name) } ++
+        extra: _*)
   }
 
   /** Positions of live data rows matched by the scan's EQUALITY
@@ -385,7 +383,6 @@ class Scan private (
     import org.apache.spark.sql.types.{LongType => SparkLong,
       StringType => SparkString, StructField => SField,
       StructType => SStruct}
-    import graft.spec.SchemaConverters.toSparkType
     val schema = resolveSnapshot().map(schemaForSnapshot)
       .getOrElse(table.schema)
     val empty = spark.createDataFrame(
@@ -398,34 +395,16 @@ class Scan private (
     val parts = planFiles().groupBy(t => (t.schemaId, eqSetOf(t))).toSeq
       .filter(_._1._2.nonEmpty)
       .flatMap { case ((fileSchemaId, eqSet), groupTasks) =>
-        val fileSchema = table.metadata.schemaById(fileSchemaId)
-          .getOrElse(schema)
         eqSet.groupBy(e => (e._2, e._3)).toSeq.flatMap {
           case ((fieldIds, deleteSchemaId), files) =>
             val pairs = eqKeyPairs(schema, fieldIds, deleteSchemaId)
             if (pairs.isEmpty) None
             else {
-              // data-side key columns resolve BY FIELD ID through the
-              // data files' write schema — a key renamed since the
-              // files were written still reads the stored column
-              val filePairs = pairs.map { case (qf, _) =>
-                val ff = fileSchema.field(qf.id).getOrElse(
-                  throw new IllegalStateException(
-                    s"graft: equality-delete key (field id ${qf.id}) " +
-                      s"missing from data write schema $fileSchemaId"))
-                (qf, ff)
-              }
-              val readSchema = SStruct(filePairs.map { case (_, ff) =>
-                SField(ff.name, toSparkType(ff.fieldType),
-                  nullable = true) })
-              val data = spark.read.schema(readSchema)
-                .parquet(groupTasks.map(_.file.filePath): _*)
-                .select(filePairs.map { case (qf, ff) =>
-                  col(ff.name).cast(toSparkType(qf.fieldType))
-                    .as(qf.name) } ++ Seq(
-                  Scan.decodedMetaPath(col("_metadata.file_path"))
-                    .as("file_path"),
-                  col("_metadata.row_index").as("pos")): _*)
+              val data = eqKeyDf(eqKeyPairs(schema, fieldIds, fileSchemaId),
+                groupTasks.map(_.file.filePath),
+                Scan.decodedMetaPath(col("_metadata.file_path"))
+                  .as("file_path"),
+                col("_metadata.row_index").as("pos"))
               val delDf = eqKeyDf(pairs, files.map(_._1).toSeq).distinct()
               Some(data.join(delDf, pairs.map(_._1.name), "left_semi")
                 .select(col("file_path"), col("pos")))

@@ -183,6 +183,62 @@ class SqlFacadeSpec extends AnyFunSuite {
       "registration must not pin the snapshot forever")
   }
 
+  test("a view reads through renames after registerTable, equality " +
+      "deletes and pushed filters included") {
+    import spark.implicits._
+    var t = freshTable("sqlrename")
+    t = TableOps.append(t, usersDf(1 to 10).coalesce(1))
+    GraftSQL.registerTable(spark, t, "users_rename")
+    t = Mutations.deleteByKeys(t, spark, Seq("user_3").toDF("name"))
+    // the equality key is renamed after its delete, and its old name is
+    // then taken by another column: the view's `name` is still field 2
+    t = t.updateSchema().renameColumn("name", "label").commit()
+    t = t.updateSchema().renameColumn("email", "name").commit()
+    t = TableOps.append(t, usersDf(11 to 15).coalesce(1)
+      .toDF("id", "label", "name", "created_at"))
+    t = Mutations.deleteByKeys(t, spark, Seq("user_12").toDF("label"))
+    val want = (1 to 15).filterNot(Set(3, 12))
+      .map(i => (i.toLong, s"user_$i", if (i % 2 == 1) null else s"u$i@x.com"))
+    val got = spark.sql("SELECT id, name, email FROM users_rename")
+      .collect().map(r => (r.getLong(0), r.getString(1), r.getString(2)))
+      .sortBy(_._1).toSeq
+    assert(got == want)
+    // pruning must resolve `name` to field 2: the current `name` column
+    // (the old emails) has bounds that exclude these values
+    val picked = spark.sql(
+      "SELECT id FROM users_rename WHERE name IN ('user_2', 'user_13')")
+      .collect().map(_.getLong(0)).sorted.toSeq
+    assert(picked == Seq(2L, 13L))
+  }
+
+  test("a view whose columns can no longer be read through its schema " +
+      "reads the table as registered") {
+    import spark.implicits._
+    var dropped = freshTable("sqldrop")
+    dropped = TableOps.append(dropped, usersDf(1 to 5))
+    GraftSQL.registerTable(spark, dropped, "users_dropped")
+    dropped = dropped.updateSchema().dropColumn("email").commit()
+    TableOps.append(dropped, usersDf(6 to 8).drop("email"))
+    val emails = spark.sql("SELECT id, email FROM users_dropped")
+      .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
+    assert(emails == (1 to 5).map(i => i.toLong ->
+      (if (i % 2 == 1) null else s"u$i@x.com")).toMap,
+      "a dropped column must not null-fill under the registered view")
+
+    // an equality delete keyed on a column the view does not carry
+    var keyed = freshTable("sqlnewkey")
+    keyed = TableOps.append(keyed, usersDf(1 to 5))
+    GraftSQL.registerTable(spark, keyed, "users_newkey")
+    keyed = keyed.updateSchema().addColumn("k", IntType).commit()
+    keyed = TableOps.append(keyed, usersDf(6 to 8)
+      .withColumn("k", ($"id" % 2).cast("int")))
+    Mutations.deleteByKeys(keyed, spark, Seq(1).toDF("k"))
+    val ids = spark.sql("SELECT id FROM users_newkey")
+      .collect().map(_.getLong(0)).sorted.toSeq
+    assert(ids == (1 to 5).map(_.toLong),
+      "the delete's key is not in the view: read the table as registered")
+  }
+
   test("SQL join against a registered table works (self + other)") {
     var t = freshTable("sqljoin")
     t = TableOps.append(t, usersDf(1 to 8))
