@@ -203,8 +203,8 @@ class SqlFacadeSpec extends AnyFunSuite {
       .collect().map(r => (r.getLong(0), r.getString(1), r.getString(2)))
       .sortBy(_._1).toSeq
     assert(got == want)
-    // pruning must resolve `name` to field 2: the current `name` column
-    // (the old emails) has bounds that exclude these values
+    // the view's `name` is field 2: pruning by the current `name` column
+    // (the old emails), whose bounds exclude these values, drops rows
     val picked = spark.sql(
       "SELECT id FROM users_rename WHERE name IN ('user_2', 'user_13')")
       .collect().map(_.getLong(0)).sorted.toSeq
