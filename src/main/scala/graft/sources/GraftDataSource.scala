@@ -343,9 +343,10 @@ private[sources] class GraftConnectorTable(
       pushed: Option[Expr]): (Table, Seq[FileScanTask]) = staged match {
     case Some((_, tasks)) => (gtable, tasks)
     case None =>
-      val t = mutationPin.getOrElse(
+      val pin = mutationPin
+      val t = pin.getOrElse(
         try gtable.refresh() catch { case _: Exception => gtable })
-      if (pinnedSnapshot.isDefined ||
+      if (pin.isDefined || pinnedSnapshot.isDefined ||
           t.schema.schemaId == querySchema.schemaId)
         (t, newScan(t, pushed).planFiles())
       else readableThrough(t)
